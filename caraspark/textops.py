@@ -789,6 +789,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
 # At cluster scale the same pattern holds with a reliable checkpoint dir /
 # a persisted table instead of executor-local blocks.
 _CC_CACHE: dict = {}
+_CC_CACHE_MAX = 8  # entries kept after any insert
 _CC_COMPUTE_COUNT = 0  # tests pin single-lineage reuse on this
 
 
@@ -811,9 +812,9 @@ def _clusters_materialized(spark, sf) -> DataFrame:
         # blocks makes it unrecoverable (lineage was truncated).  Dropping
         # our reference is enough — ContextCleaner frees the blocks once the
         # DataFrame is garbage-collected with no other holders.
-        while len(_CC_CACHE) > 8:
-            _CC_CACHE.pop(next(iter(_CC_CACHE)))
         _CC_CACHE[key] = df
+        while len(_CC_CACHE) > _CC_CACHE_MAX:
+            _CC_CACHE.pop(next(iter(_CC_CACHE)))
     return df
 
 

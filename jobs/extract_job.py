@@ -5,11 +5,15 @@
         --output <table dir> [--units 64] [--unit-chunk 16] \
         [--synth-docs N]  # generate the corpus instead of reading one
 
-Reads documents_raw, runs the extraction pipeline, writes the extracted
-table partitioned by work-unit bucket with snapshot-manifest commits every
-``--unit-chunk`` units — killing the job at any point loses at most one
-chunk of work; rerunning resumes from the last committed snapshot and
-reproduces byte-identical output (idempotent per-bucket dynamic overwrite).
+Reads documents_raw, stages it clustered by work-unit bucket (one
+exchange, one file per bucket slice), runs the extraction pipeline, and
+writes the extracted table partitioned by bucket with snapshot-manifest
+commits every ``--unit-chunk`` units. Each chunk is one Spark job: its
+read has the input schema pinned and its write observes every unit's row
+count, which the commit records. Killing the job at any point loses at
+most one chunk of work; rerunning resumes from the last committed snapshot
+and reproduces byte-identical output (idempotent per-bucket dynamic
+overwrite).
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import Observation, functions as F  # noqa: E402
 
 from caraspark.extract import extract  # noqa: E402
 from caraspark.manifest import SnapshotManifest  # noqa: E402
@@ -35,9 +39,19 @@ def stage_input(spark, raw, stage_dir: str, units: int) -> str:
 
     The round-1 loop filtered the FULL input per chunk — with
     units/unit_chunk = 64/16 the whole 100 TB corpus would be scanned 4×
-    (worse with smaller chunks). Staging costs one scan + one shuffle-free
-    write (each task fans its rows out to its buckets' directories), after
-    which every chunk read is path-pruned to chunk_size/units of the data.
+    (worse with smaller chunks). Staging costs one scan and ONE exchange:
+    a bucket-keyed ``REBALANCE`` in front of the partitioned write. Without
+    it every input task writes one file into every bucket it touches —
+    (input tasks × units) small files, each a footer, an open, a rename and
+    ~20–35 ms of task time at write and again at read. With it each staged
+    bucket lands as one file per rebalanced slice: AQE coalesces small
+    buckets into one task and splits an oversized bucket into
+    advisory-size slices, so a 10^12-doc corpus stages about
+    (bytes ÷ ``spark.sql.adaptive.advisoryPartitionSizeInBytes``) files.
+    The price is one shuffle of the raw blobs. It buys the rest of the
+    pass too: a chunk read hands each task whole bucket files, so the
+    snapshot write emits one file per bucket slice with no second
+    exchange.
 
     Resume reuses an existing complete stage (``_STAGED`` marker — written
     by us after the job commit, since dynamic partition-overwrite mode
@@ -62,18 +76,25 @@ def stage_input(spark, raw, stage_dir: str, units: int) -> str:
     keyed = raw.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(units)).cast("int")
     )
-    keyed.write.mode("overwrite").partitionBy("bucket").parquet(stage_dir)
+    (
+        keyed.hint("rebalance", "bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(stage_dir)
+    )
     with open(marker, "w") as f:
         f.write(str(units))
     return stage_dir
 
 
-def chunk_input(spark, stage_dir: str, chunk: list[int]):
+def chunk_input(spark, stage_dir: str, chunk: list[int], schema=None):
     """The per-chunk input DataFrame: reads ONLY the chunk's staged bucket
     directories (asserted by tests/test_resume.py::test_chunk_scan_is_pruned
-    via ``inputFiles()``). A chunk whose buckets all received zero rows has
-    no directories at all — that's an empty input, not an error (zero
-    paths would make spark.read.parquet raise UNABLE_TO_INFER_SCHEMA)."""
+    via ``inputFiles()``). ``schema`` pins the staged input's schema, so
+    the read plans without a footer-inference job; without it the schema
+    is inferred. A chunk whose buckets all received zero rows has no
+    directories at all — that's an empty input, not an error (zero paths
+    would make spark.read.parquet raise UNABLE_TO_INFER_SCHEMA)."""
     from caraspark.schemas import DOCUMENTS_RAW
 
     paths = [
@@ -82,8 +103,9 @@ def chunk_input(spark, stage_dir: str, chunk: list[int]):
         if os.path.isdir(p := os.path.join(stage_dir, f"bucket={u}"))
     ]
     if not paths:
-        return spark.createDataFrame([], DOCUMENTS_RAW)
-    return spark.read.parquet(*paths)
+        return spark.createDataFrame([], schema or DOCUMENTS_RAW)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def run_job(
@@ -137,17 +159,19 @@ def run_job(
     n_noindex = 0
     for i in range(0, len(todo), unit_chunk):
         chunk = todo[i : i + unit_chunk]
-        part = chunk_input(spark, stage_dir, chunk)
+        part = chunk_input(spark, stage_dir, chunk, raw.schema)
+        seen = None
+        if honor_robots and min_quality is None:
+            # extraction is 1:1 per input row, so the dropped count is
+            # (chunk input rows) - (written rows); both are observed by
+            # the chunk's one write job — counting the filtered-out side
+            # directly would run the extraction UDF a second time
+            seen = Observation()
+            part = part.observe(seen, F.count(F.lit(1)).alias("rows"))
         ex = extract(part).withColumn(
             "bucket", F.pmod(F.xxhash64("url"), F.lit(units)).cast("int")
         )
-        n_in = 0
         if honor_robots:
-            # extraction is 1:1 per input row, so the dropped count is
-            # (staged input rows) - (written rows) — both come from
-            # parquet footers; counting the filtered-out side directly
-            # would run the extraction UDF a second time per chunk
-            n_in = int(part.count())
             ex = ex.filter(
                 F.col("robots_meta").isNull()
                 | ~F.col("robots_meta").contains("noindex")
@@ -157,8 +181,7 @@ def run_job(
             from caraspark.curation import quality_features
 
             persisted = ex = ex.persist()
-            if not honor_robots:
-                n_in = int(part.count())
+            n_in = int(part.count())
             keep = (
                 quality_features(
                     ex.filter(F.length("text") > 0)
@@ -168,18 +191,24 @@ def run_job(
                 .select(F.col("doc_id").alias("url"))
             )
             ex = ex.join(keep, "url", "left_semi")
+        # per-unit row counts, observed by the write job itself (the
+        # chunk's input holds only its own buckets) — no re-count job
+        written = Observation()
+        ex = ex.observe(
+            written,
+            *[F.count_if(F.col("bucket") == u).alias(str(u)) for u in chunk],
+        )
         ex.write.mode("overwrite").partitionBy("bucket").parquet(gen_dir)
         if persisted is not None:
             persisted.unpersist()
-        out_paths = [
-            p
-            for u in chunk
-            if os.path.isdir(p := os.path.join(gen_dir, f"bucket={u}"))
-        ]
-        n = int(spark.read.parquet(*out_paths).count()) if out_paths else 0
+        counts = written.get
+        rows = {u: int(counts[str(u)]) for u in chunk}
+        n = sum(rows.values())
+        if seen is not None:
+            n_in = int(seen.get["rows"])
         if honor_robots or min_quality is not None:
             n_noindex += n_in - n
-        man.commit({u: {"rows": None, "chunk": n_chunks} for u in chunk})
+        man.commit({u: {"rows": rows[u], "chunk": n_chunks} for u in chunk})
         docs_done += n
         n_chunks += 1
         if fail_after_chunks is not None and n_chunks >= fail_after_chunks:
@@ -331,8 +360,10 @@ def upsert_recrawl(
     cur_units = man.units_map()
     new_snap = man.commit(
         {
-            u: {**(cur_units.get(str(u)) or {}), "gen": new_gen,
-                "upsert": True}
+            # the rewritten bucket's old row count no longer holds
+            u: {**{k: v for k, v in (cur_units.get(str(u)) or {}).items()
+                   if k != "rows"},
+                "gen": new_gen, "upsert": True}
             for u in touched
         }
     )

@@ -18,6 +18,28 @@ def _table_fingerprint(df):
     return rows
 
 
+def _committed_rows(out):
+    """Sum of the row counts the current snapshot records per unit."""
+    from caraspark.manifest import SnapshotManifest
+
+    return sum(m["rows"] for m in SnapshotManifest(out).units_map().values())
+
+
+def _fragment_buckets(spark, out):
+    """Rewrite every committed bucket as two part files holding the same
+    rows: run_job writes one file per bucket, so compaction tests build
+    their fragmented input explicitly."""
+    import shutil
+
+    from caraspark.manifest import SnapshotManifest
+
+    for path in SnapshotManifest(out).unit_paths():
+        df = spark.read.parquet(path)
+        rows, schema = df.collect(), df.schema
+        shutil.rmtree(path)
+        spark.createDataFrame(rows, schema).repartition(2).write.parquet(path)
+
+
 def test_resume_after_kill(spark, tmp_path):
     full_dir = str(tmp_path / "full")
     crash_dir = str(tmp_path / "crash")
@@ -28,6 +50,7 @@ def test_resume_after_kill(spark, tmp_path):
     assert not stats["crashed"] and stats["units_done"] == UNITS
     ref = _table_fingerprint(read_extracted(spark, full_dir))
     assert len(ref) == N_DOCS
+    assert _committed_rows(full_dir) == N_DOCS
 
     # crash after 2 of 4 chunks, then resume
     s1 = run_job(spark, None, crash_dir, units=UNITS, unit_chunk=2,
@@ -41,6 +64,7 @@ def test_resume_after_kill(spark, tmp_path):
     assert not s2["crashed"]
     got = _table_fingerprint(read_extracted(spark, crash_dir))
     assert got == ref  # byte-identical, no dupes, no holes
+    assert _committed_rows(crash_dir) == len(got)
 
 
 def test_rerun_is_noop(spark, tmp_path):
@@ -158,6 +182,7 @@ def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):
 
     out = str(tmp_path / "tbl3")
     run_job(spark, None, out, units=4, unit_chunk=1, synth_docs=N_DOCS)
+    _fragment_buckets(spark, out)
     before_counts = bucket_file_counts(out)
     assert any(n > 1 for n in before_counts.values()), before_counts
     ref = _table_fingerprint(read_extracted(spark, out))
@@ -812,6 +837,7 @@ def test_compaction_sort_by_clusters_buckets(spark, tmp_path):
 
     out = str(tmp_path / "tbl_sorted")
     run_job(spark, None, out, units=4, unit_chunk=1, synth_docs=N_DOCS)
+    _fragment_buckets(spark, out)
     ref = _table_fingerprint(read_extracted(spark, out))
 
     res = compact_table(spark, out, sort_by=["url"])
@@ -833,3 +859,89 @@ def test_compaction_sort_by_clusters_buckets(spark, tmp_path):
     for f in files:
         urls = pq.read_table(f, columns=["url"]).column("url").to_pylist()
         assert urls == sorted(urls), f
+
+
+def _parquet_files(d):
+    import os
+
+    return sum(f.endswith(".parquet") for f in os.listdir(d))
+
+
+def test_stage_and_snapshot_write_one_file_per_bucket(spark, tmp_path):
+    """The stage's bucket-keyed rebalance leaves one file per staged
+    bucket even from a multi-partition input (not one per input task),
+    and each chunk then writes one file per snapshot bucket."""
+    import os
+
+    from caraspark.corpus import synth_df
+    from caraspark.maintenance import bucket_file_counts
+    from jobs.extract_job import stage_input
+
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    raw = synth_df(spark, N_DOCS)
+    assert raw.rdd.getNumPartitions() > 1
+    stage = str(tmp_path / "stage")
+    stage_input(spark, raw, stage, units=UNITS)
+    staged = [d for d in os.listdir(stage) if d.startswith("bucket=")]
+    assert len(staged) == UNITS
+    assert all(_parquet_files(os.path.join(stage, d)) == 1 for d in staged)
+
+    out = str(tmp_path / "tbl")
+    run_job(spark, None, out, units=UNITS, unit_chunk=2, synth_docs=N_DOCS)
+    counts = bucket_file_counts(out)
+    assert counts == {u: 1 for u in range(UNITS)}, counts
+
+
+def test_pass_runs_one_job_per_chunk(spark, tmp_path):
+    """A run_job pass launches no more Spark jobs than staging does plus
+    one per chunk: the chunk read plans without schema inference, and the
+    row counts come from the write itself."""
+    from caraspark.corpus import synth_df
+    from jobs.extract_job import stage_input
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("stage-only", "stage jobs")
+        stage_input(spark, synth_df(spark, N_DOCS), str(tmp_path / "stage"),
+                    units=UNITS)
+        n_stage = len(tracker.getJobIdsForGroup("stage-only"))
+        sc.setJobGroup("full-pass", "run_job jobs")
+        stats = run_job(spark, None, str(tmp_path / "tbl"), units=UNITS,
+                        unit_chunk=2, synth_docs=N_DOCS)
+        n_pass = len(tracker.getJobIdsForGroup("full-pass"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["chunks"] == UNITS // 2
+    assert n_pass <= n_stage + stats["chunks"], (n_pass, n_stage)
+
+
+def test_manifest_rows_match_snapshot(spark, tmp_path):
+    """Every committed unit records its exact row count; an upsert drops
+    the count of each bucket it rewrites instead of carrying a stale one."""
+    import datetime
+
+    from caraspark.manifest import SnapshotManifest
+    from jobs.extract_job import upsert_recrawl
+
+    out = str(tmp_path / "t")
+    run_job(spark, None, out, units=UNITS, unit_chunk=3, synth_docs=N_DOCS)
+    snap = read_extracted(spark, out)
+    want = dict(snap.groupBy("bucket").count().collect())
+    units = SnapshotManifest(out).units_map()
+    assert {int(u): m["rows"] for u, m in units.items()} == {
+        u: want.get(u, 0) for u in range(UNITS)
+    }
+    assert _committed_rows(out) == snap.count() == N_DOCS
+
+    url = sorted(r.url for r in snap.select("url").collect())[0]
+    batch = spark.createDataFrame(
+        [(url, datetime.datetime(2026, 8, 19), b"<p>new</p>", None, "en")],
+        "url string, warc_ts timestamp_ntz, html binary, text string,"
+        " lang string",
+    )
+    stats = upsert_recrawl(spark, out, batch, units=UNITS)
+    units = SnapshotManifest(out).units_map()
+    for u, m in units.items():
+        assert ("rows" in m) == (int(u) not in stats["touched_buckets"]), m
+    assert read_extracted(spark, out).count() == N_DOCS

@@ -953,6 +953,30 @@ def test_dedup_best_rep_elects_highest_score(spark, sf_smoke):
         )
 
 
+def test_cc_cache_holds_at_most_eight_entries(spark, monkeypatch, tmp_path):
+    """A miss on a full cluster-table cache inserts the new entry and
+    evicts the oldest, so the cache never holds more than eight."""
+    from caraspark import textops
+
+    class _Table:
+        def select(self, *cols):
+            return self
+
+        def localCheckpoint(self, eager=True):
+            return self
+
+    monkeypatch.setattr(textops, "_ngram_pairs", lambda *a: _Table())
+    monkeypatch.setattr(textops, "connected_components", lambda df: df)
+    monkeypatch.setattr(textops, "_CC_CACHE", {})
+    keys = []
+    for i in range(textops._CC_CACHE_MAX + 3):
+        textops._clusters_materialized(spark, str(tmp_path / f"sf{i}"))
+        keys.append((spark.sparkContext.applicationId,
+                     str(tmp_path / f"sf{i}")))
+        assert len(textops._CC_CACHE) <= textops._CC_CACHE_MAX
+    assert list(textops._CC_CACHE) == keys[-textops._CC_CACHE_MAX:]
+
+
 def test_cc_materialization_single_lineage(spark, sf_smoke):
     """Round-3 verdict item 2: the three CC consumers (dedup_clusters,
     dedup_best_rep, dedup_cluster_sizes) share ONE connected-components
