@@ -2,18 +2,19 @@
 
 ``extract(df)``: documents_raw → extracted, as ONE narrow mapInArrow stage —
 the whole C2–C27 chain is per-document pure compute, so there is no shuffle
-between parse stages; the only exchange is the explicit skew-defeating
-repartition in front.
+between parse stages.
 
 Scale design (the north_rule's "partitioning / shuffle / skew handled
 explicitly"):
 
+* **narrow by default** — scan partitions feed mapInArrow directly: zero
+  shuffle, parallelism from the parquet input splits;
 * **column pruning** — only (url, warc_ts, html) reach the UDF; `text`/`lang`
   never leave the parquet footer (check .explain: ReadSchema is 3 columns);
-* **size-class salting** — partition key is (size_class, salt) where
-  size_class = ceil(log2(bytes)) and salt spreads each class over the
-  cluster: a 1 GiB document never rides in a partition with 10k small ones,
-  and AQE skew-split backs this up at runtime;
+* **opt-in skew handling** — ``salt="giants"`` sends only documents above a
+  byte threshold through a round-robin exchange, and ``salt=True`` salts
+  every document by (size_class, salt) where size_class =
+  ceil(log2(bytes)), for inputs whose layout clusters big documents;
 * **byte-budgeted output batches** — the UDF re-chunks its output so one
   Arrow IPC message never exceeds ~64 MiB even when inputs are huge;
 * **per-doc resource budgets** — parse depth/object caps inside the engine
@@ -23,199 +24,51 @@ explicitly"):
 from __future__ import annotations
 
 import functools
+import operator
 import os
 from typing import Iterator
 
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from caraspark.schemas import EXTRACTED
 
 OUTPUT_BATCH_BYTES = 64 * 1024 * 1024
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string(), False),
-        pa.field("warc_ts", pa.timestamp("us"), True),
-        pa.field("text", pa.large_binary(), True),
-        pa.field(
-            "spans",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("start", pa.int64()),
-                        ("end", pa.int64()),
-                        ("label", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field("outlinks", pa.list_(pa.string()), True),
-        pa.field("title", pa.string(), True),
-        pa.field("canonical", pa.string(), True),
-        pa.field("description", pa.string(), True),
-        pa.field(
-            "headings",
-            pa.list_(
-                pa.struct([("block", pa.int32()), ("level", pa.int32())])
-            ),
-            True,
-        ),
-        pa.field("og_title", pa.string(), True),
-        pa.field("og_description", pa.string(), True),
-        pa.field("og_image", pa.string(), True),
-        pa.field("anchors", pa.list_(pa.string()), True),
-        pa.field(
-            "tables",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("table", pa.int32()),
-                        ("row", pa.int32()),
-                        ("col", pa.int32()),
-                        ("header", pa.bool_()),
-                        ("cell", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "lists",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("list", pa.int32()),
-                        ("item", pa.int32()),
-                        ("depth", pa.int32()),
-                        ("ordered", pa.bool_()),
-                        ("item_text", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "images",
-            pa.list_(
-                pa.struct([("src", pa.string()), ("alt", pa.string())])
-            ),
-            True,
-        ),
-        pa.field("jsonld", pa.list_(pa.string()), True),
-        pa.field("robots_meta", pa.string(), True),
-        pa.field("refresh_meta", pa.string(), True),
-        pa.field("base_href", pa.string(), True),
-        pa.field("next_href", pa.string(), True),
-        pa.field("prev_href", pa.string(), True),
-        pa.field(
-            "forms",
-            pa.list_(
-                pa.struct([("method", pa.string()), ("action", pa.string())])
-            ),
-            True,
-        ),
-        pa.field(
-            "alternates",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("hreflang", pa.string()),
-                        ("type", pa.string()),
-                        ("href", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "microdata",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("item", pa.int32()),
-                        ("itemtype", pa.string()),
-                        ("prop", pa.string()),
-                        ("value", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "rdfa",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("item", pa.int32()),
-                        ("vocab", pa.string()),
-                        ("typeof", pa.string()),
-                        ("prop", pa.string()),
-                        ("value", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "verdict",
-            pa.struct([("valid", pa.bool_()), ("strict", pa.bool_())]),
-        ),
-        pa.field("kind", pa.string()),
-        pa.field(
-            "errors",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("code", pa.string()),
-                        ("pos", pa.int64()),
-                        ("obj_num", pa.int32()),
-                        ("obj_gen", pa.int32()),
-                        ("path", pa.string()),
-                        ("msg", pa.string()),
-                    ]
-                )
-            ),
-        ),
-        pa.field(
-            "metrics",
-            pa.struct(
-                [
-                    ("n_objects", pa.int32()),
-                    ("n_updates", pa.int32()),
-                    ("n_streams", pa.int32()),
-                    ("n_holes", pa.int32()),
-                    ("bytes_in", pa.int64()),
-                    ("bytes_decoded", pa.int64()),
-                    ("parse_ms", pa.float64()),
-                ]
-            ),
-        ),
-        pa.field(
-            "flags",
-            pa.struct(
-                [
-                    ("encrypted", pa.bool_()),
-                    ("hybrid", pa.bool_()),
-                    ("linearized", pa.bool_()),
-                ]
-            ),
-        ),
-        pa.field("version", pa.string(), True),
-        pa.field(
-            "lineage",
-            pa.struct(
-                [
-                    ("partition_id", pa.int32()),
-                    ("salt", pa.int32()),
-                    ("attempt", pa.int32()),
-                    ("snapshot", pa.string()),
-                ]
-            ),
-        ),
-    ]
+_ARROW_SCHEMA = to_arrow_schema(EXTRACTED)
+# text stays large_binary: the session sets useLargeVarTypes, and one giant
+# document's text must fit in one array
+_ARROW_SCHEMA = _ARROW_SCHEMA.set(
+    _ARROW_SCHEMA.get_field_index("text"),
+    pa.field("text", pa.large_binary(), True),
+)
+
+# Columns the UDF fills from its input batch and task context, not from the
+# engine's result.
+_INPUT_COLUMNS = ("url", "warc_ts", "lineage")
+
+
+def _result_getter(f):
+    """The ExtractResult → column value getter for one EXTRACTED field.
+
+    A struct column reads its sub-fields as one tuple (pyarrow builds a
+    struct from a tuple in field order); a list-of-struct surface passes the
+    engine's tuples through unchanged, since every surface emits them in
+    struct-field order."""
+    if f.name == "errors":
+        return operator.methodcaller("errors_as_rows")
+    if isinstance(f.dataType, StructType):
+        return operator.attrgetter(*f.dataType.names)
+    return operator.attrgetter(f.name)
+
+
+_RESULT_GETTERS = tuple(
+    (f.name, _result_getter(f))
+    for f in EXTRACTED.fields
+    if f.name not in _INPUT_COLUMNS
 )
 
 
@@ -227,8 +80,11 @@ def _extract_batches(
 
     Hot-loop discipline: columns in (one C-level ``to_pylist`` per column),
     columns out (one ``pa.array`` per field) — never per-row Arrow scalars
-    or row dicts; with ~0.4 ms of real work per document, per-row
-    conversion overhead would otherwise dominate the profile.
+    or row dicts. Each document's result is appended to the column lists
+    through ``_RESULT_GETTERS``, the (column, getter) table derived once
+    from EXTRACTED, and then dropped: results are never buffered until the
+    flush, because each holds a per-PDF ``type_assignments`` dict and worker
+    memory must stay flat.
     """
     # import inside the worker so the closure pickles only the module name
     from caraspark.pdfengine import process_document as _pd
@@ -242,6 +98,7 @@ def _extract_batches(
     snapshot = os.environ.get("CARASPARK_SNAPSHOT")
 
     cols: dict[str, list] = {f.name: [] for f in _ARROW_SCHEMA}
+    sinks = [(cols[name], get) for name, get in _RESULT_GETTERS]
     pending = 0
 
     def flush():
@@ -269,60 +126,11 @@ def _extract_batches(
             r = process_document(blob if blob is not None else b"")
             cols["url"].append(urls[i])
             cols["warc_ts"].append(tss[i])
-            cols["text"].append(r.text)
-            cols["spans"].append(r.spans_as_rows())
-            cols["outlinks"].append(r.outlinks)
-            cols["title"].append(r.title)
-            cols["canonical"].append(r.canonical)
-            cols["description"].append(r.description)
-            cols["headings"].append(r.headings_as_rows())
-            cols["og_title"].append(r.og_title)
-            cols["og_description"].append(r.og_description)
-            cols["og_image"].append(r.og_image)
-            cols["anchors"].append(r.anchors)
-            cols["tables"].append(r.tables_as_rows())
-            cols["lists"].append(r.lists_as_rows())
-            cols["images"].append(r.images_as_rows())
-            cols["jsonld"].append(r.jsonld)
-            cols["robots_meta"].append(r.robots_meta)
-            cols["refresh_meta"].append(r.refresh_meta)
-            cols["base_href"].append(r.base_href)
-            cols["next_href"].append(r.next_href)
-            cols["prev_href"].append(r.prev_href)
-            cols["forms"].append(r.forms_as_rows())
-            cols["alternates"].append(r.alternates_as_rows())
-            cols["microdata"].append(r.microdata_as_rows())
-            cols["rdfa"].append(r.rdfa_as_rows())
-            cols["verdict"].append({"valid": r.valid, "strict": r.strict})
-            cols["kind"].append(r.kind)
-            cols["errors"].append(r.errors_as_rows())
-            cols["metrics"].append(
-                {
-                    "n_objects": r.n_objects,
-                    "n_updates": r.n_updates,
-                    "n_streams": r.n_streams,
-                    "n_holes": r.n_holes,
-                    "bytes_in": r.bytes_in,
-                    "bytes_decoded": r.bytes_decoded,
-                    "parse_ms": r.parse_ms,
-                }
-            )
-            cols["flags"].append(
-                {
-                    "encrypted": r.encrypted,
-                    "hybrid": r.hybrid,
-                    "linearized": r.linearized,
-                }
-            )
-            cols["version"].append(r.version)
             cols["lineage"].append(
-                {
-                    "partition_id": pid,
-                    "salt": salts[i] if salts is not None else -1,
-                    "attempt": attempt,
-                    "snapshot": snapshot,
-                }
+                (pid, salts[i] if salts is not None else -1, attempt, snapshot)
             )
+            for col, get in sinks:
+                col.append(get(r))
             pending += len(r.text or b"") + r.bytes_in // 4
             if pending >= OUTPUT_BATCH_BYTES:
                 yield from flush()
@@ -347,7 +155,7 @@ def extract(
     "headmeta" alias) and only those surfaces are assembled per document —
     the rest are NULL columns that never cross the Arrow boundary as data.
     ``want=None`` keeps the legacy boolean: ``want_text=True`` computes all
-    ten surfaces, ``False`` the stats-only mode. Spark prunes INPUT
+    21 surfaces, ``False`` the stats-only mode. Spark prunes INPUT
     columns at the scan for free; this is the matching engine-side prune
     for the computed surfaces, which Catalyst cannot see inside the UDF —
     a metadata-only consumer at 100 TB should not pay for text assembly,

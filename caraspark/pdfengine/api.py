@@ -166,61 +166,6 @@ class ExtractResult:
             for e in self.errors
         ]
 
-    def headings_as_rows(self) -> list[dict] | None:
-        if self.headings is None:
-            return None
-        return [{"block": b, "level": lv} for b, lv in self.headings]
-
-    def tables_as_rows(self) -> list[dict] | None:
-        if self.tables is None:
-            return None
-        return [
-            {"table": t, "row": r, "col": c, "header": h, "cell": s}
-            for t, r, c, h, s in self.tables
-        ]
-
-    def lists_as_rows(self) -> list[dict] | None:
-        if self.lists is None:
-            return None
-        return [
-            {"list": l, "item": i, "depth": d, "ordered": o, "item_text": s}
-            for l, i, d, o, s in self.lists
-        ]
-
-    def images_as_rows(self) -> list[dict] | None:
-        if self.images is None:
-            return None
-        return [{"src": s, "alt": a} for s, a in self.images]
-
-    def alternates_as_rows(self) -> list[dict] | None:
-        if self.alternates is None:
-            return None
-        return [
-            {"hreflang": hl, "type": t, "href": h}
-            for hl, t, h in self.alternates
-        ]
-
-    def forms_as_rows(self) -> list[dict] | None:
-        if self.forms is None:
-            return None
-        return [{"method": m, "action": a} for m, a in self.forms]
-
-    def microdata_as_rows(self) -> list[dict] | None:
-        if self.microdata is None:
-            return None
-        return [
-            {"item": i, "itemtype": t, "prop": p, "value": v}
-            for i, t, p, v in self.microdata
-        ]
-
-    def rdfa_as_rows(self) -> list[dict] | None:
-        if self.rdfa is None:
-            return None
-        return [
-            {"item": i, "vocab": vo, "typeof": t, "prop": p, "value": v}
-            for i, vo, t, p, v in self.rdfa
-        ]
-
     def spans_as_rows(self) -> list[dict] | None:
         if self.spans is None:
             return None
@@ -256,13 +201,48 @@ def is_pdf(blob: bytes) -> bool:
 
 DEFAULT_TIME_BUDGET_S = 60.0  # straggler guard; parse degrades, never hangs
 
-# The extraction surfaces a consumer can request (SPEC v1–v15).
-# "headmeta" is accepted as an alias for {title, canonical, description}.
-SURFACES = frozenset(
-    {"text", "spans", "outlinks", "title", "canonical", "description",
-     "headings", "ogmeta", "anchors", "tables", "lists", "images",
-     "jsonld", "robots", "alternates", "refresh", "base", "forms",
-     "pagination", "microdata", "rdfa"}
+# The extraction surfaces a consumer can request (SPEC v1–v21), each mapped
+# to the ExtractResult fields it fills; those field names are also the
+# EXTRACTED columns. "headmeta" is accepted as an alias for {title,
+# canonical, description}.
+SURFACE_FIELDS: dict[str, tuple[str, ...]] = {
+    "text": ("text",),
+    "spans": ("spans",),
+    "outlinks": ("outlinks",),
+    "title": ("title",),
+    "canonical": ("canonical",),
+    "description": ("description",),
+    "headings": ("headings",),
+    "ogmeta": ("og_title", "og_description", "og_image"),
+    "anchors": ("anchors",),
+    "tables": ("tables",),
+    "lists": ("lists",),
+    "images": ("images",),
+    "jsonld": ("jsonld",),
+    "robots": ("robots_meta",),
+    "alternates": ("alternates",),
+    "refresh": ("refresh_meta",),
+    "base": ("base_href",),
+    "forms": ("forms",),
+    "pagination": ("next_href", "prev_href"),
+    "microdata": ("microdata",),
+    "rdfa": ("rdfa",),
+}
+SURFACES = frozenset(SURFACE_FIELDS)
+
+# HTML-only list surfaces: a PDF has none, so each is [] when requested.
+_HTML_ONLY_LISTS = (
+    "outlinks", "anchors", "tables", "lists", "images", "jsonld",
+    "alternates", "forms", "microdata", "rdfa",
+)
+
+# ``extract_html``'s result tuple, as ExtractResult field names; "og" is
+# the (og_title, og_description, og_image) triple.
+_HTML_RESULT = (
+    "text", "spans", "outlinks", "title", "canonical", "description",
+    "headings", "og", "anchors", "tables", "lists", "images", "jsonld",
+    "robots_meta", "alternates", "refresh_meta", "base_href", "forms",
+    "next_href", "prev_href", "microdata", "rdfa",
 )
 
 
@@ -347,24 +327,11 @@ def _process_pdf(
 
     # text and spans share one content-stream assembly pass; run it when
     # either is requested, then drop the unrequested half.
+    text = spans = None
     if want & {"text", "spans"}:
-        text, spans = extract_text_spans(doc, errors)
-        if "text" not in want:
-            text = None
-        if "spans" not in want:
-            spans = None
-    else:
-        text, spans = None, None
-    outlinks: list | None = [] if "outlinks" in want else None
-    anchors: list | None = [] if "anchors" in want else None
-    tables: list | None = [] if "tables" in want else None
-    lists: list | None = [] if "lists" in want else None
-    images: list | None = [] if "images" in want else None
-    jsonld: list | None = [] if "jsonld" in want else None
-    alternates: list | None = [] if "alternates" in want else None
-    forms: list | None = [] if "forms" in want else None
-    microdata: list | None = [] if "microdata" in want else None
-    rdfa: list | None = [] if "rdfa" in want else None
+        t, sp = extract_text_spans(doc, errors)
+        text = t if "text" in want else None
+        spans = sp if "spans" in want else None
     title = _pdf_info_text(doc, "Title") if "title" in want else None
     description = (
         _pdf_info_text(doc, "Subject") if "description" in want else None
@@ -389,16 +356,6 @@ def _process_pdf(
         kind="pdf",
         text=text,
         spans=spans,
-        outlinks=outlinks,
-        anchors=anchors,
-        tables=tables,
-        lists=lists,
-        images=images,
-        jsonld=jsonld,
-        alternates=alternates,
-        forms=forms,
-        microdata=microdata,
-        rdfa=rdfa,
         title=title,
         description=description,
         headings=headings,
@@ -416,6 +373,8 @@ def _process_pdf(
             f"{k[0]}.{k[1]}": v for k, v in sorted(tres.assignments.items())
         },
     )
+    for f in want.intersection(_HTML_ONLY_LISTS):
+        setattr(res, f, [])
     if want_objects:
         res.objects_json = {
             f"{k[0]}.{k[1]}": canonical_json(
@@ -427,118 +386,25 @@ def _process_pdf(
 
 
 def _process_html(blob, want=SURFACES) -> ExtractResult:
-    errors: list[PdfError] = []
+    res = ExtractResult(kind="html", text=None)
     if want:
         # HTML extraction is one single-pass parse that produces all the
         # surfaces together (the pass itself is the cost; the per-surface
         # collection is incidental), so any requested surface runs the full
-        # parse and the unrequested ones are nulled afterwards — the saving
-        # is in what crosses the Arrow boundary, not the parse.
-        (
-            text, spans, outlinks, title, canonical, description, headings,
-            og, anchors, tables, lists, images, jsonld, robots_meta,
-            alternates, refresh_meta, base_href, forms, next_href,
-            prev_href, microdata, rdfa,
-        ) = extract_html(blob)
-        has_content = bool(text)
-        if "text" not in want:
-            text = None
-        if "spans" not in want:
-            spans = None
-        if "outlinks" not in want:
-            outlinks = None
-        if "anchors" not in want:
-            anchors = None
-        if "tables" not in want:
-            tables = None
-        if "lists" not in want:
-            lists = None
-        if "images" not in want:
-            images = None
-        if "jsonld" not in want:
-            jsonld = None
-        if "robots" not in want:
-            robots_meta = None
-        if "alternates" not in want:
-            alternates = None
-        if "refresh" not in want:
-            refresh_meta = None
-        if "base" not in want:
-            base_href = None
-        if "forms" not in want:
-            forms = None
-        if "pagination" not in want:
-            next_href = None
-            prev_href = None
-        if "microdata" not in want:
-            microdata = None
-        if "rdfa" not in want:
-            rdfa = None
-        if "title" not in want:
-            title = None
-        if "canonical" not in want:
-            canonical = None
-        if "description" not in want:
-            description = None
-        if "headings" not in want:
-            headings = None
-        if "ogmeta" not in want:
-            og = (None, None, None)
+        # parse and only the requested fields are kept — the saving is in
+        # what crosses the Arrow boundary, not the parse.
+        out = dict(zip(_HTML_RESULT, extract_html(blob)))
+        out["og_title"], out["og_description"], out["og_image"] = out["og"]
+        has_content = bool(out["text"])
+        for surface in want:
+            for f in SURFACE_FIELDS[surface]:
+                setattr(res, f, out[f])
     else:
         # Stats mode skips text materialization but must agree with the full
         # run on the error taxonomy: early-exit emptiness probe, no content.
         from caraspark.htmlengine import html_has_content
 
-        text = None
-        spans = None
-        outlinks = None
-        anchors = None
-        tables = None
-        lists = None
-        images = None
-        jsonld = None
-        robots_meta = None
-        alternates = None
-        refresh_meta = None
-        base_href = None
-        forms = None
-        next_href = None
-        prev_href = None
-        microdata = None
-        rdfa = None
-        title = None
-        canonical = None
-        description = None
-        headings = None
-        og = (None, None, None)
         has_content = html_has_content(blob)
     if not has_content:
-        errors.append(PdfError("html.no_content", pos=0))
-    return ExtractResult(
-        kind="html",
-        text=text,
-        spans=spans,
-        outlinks=outlinks,
-        anchors=anchors,
-        tables=tables,
-        lists=lists,
-        images=images,
-        jsonld=jsonld,
-        robots_meta=robots_meta,
-        alternates=alternates,
-        refresh_meta=refresh_meta,
-        base_href=base_href,
-        forms=forms,
-        next_href=next_href,
-        prev_href=prev_href,
-        microdata=microdata,
-        rdfa=rdfa,
-        title=title,
-        canonical=canonical,
-        description=description,
-        headings=headings,
-        og_title=og[0],
-        og_description=og[1],
-        og_image=og[2],
-        errors=errors,
-    )
+        res.errors.append(PdfError("html.no_content", pos=0))
+    return res

@@ -21,6 +21,7 @@ from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from caraspark.corpus import corpus_rows_for_sf, synth_df
 from caraspark.oracle_freeze import (
@@ -61,10 +62,6 @@ def _q(name: str, sql):
     return deco
 
 
-_EDGES_DDL = (
-    "url string, src_num int, src_gen int, dst_num int, dst_gen int, "
-    "path string, dangling boolean"
-)
 _EDGES_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -77,10 +74,6 @@ _EDGES_ARROW = pa.schema(
     ]
 )
 
-_OBJECTS_DDL = (
-    "url string, num int, gen int, kind string, type_name string, "
-    "body_json string, n_refs int"
-)
 _OBJECTS_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -93,9 +86,6 @@ _OBJECTS_ARROW = pa.schema(
     ]
 )
 
-_ATTACH_DDL = (
-    "url string, att_name string, att_md5 string, att_size bigint"
-)
 _ATTACH_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -105,7 +95,6 @@ _ATTACH_ARROW = pa.schema(
     ]
 )
 
-_CLEANUP_DDL = "url string, clean_md5 string, clean_bytes bigint, fixpoint boolean"
 _CLEANUP_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -279,15 +268,17 @@ def _cached(spark, sf, which: str):
     dominates their cost."""
     from caraspark.qcache import get_or_persist
 
-    batches, ddl = {
-        "edges": (_edges_batches, _EDGES_DDL),
-        "objects": (_objects_batches, _OBJECTS_DDL),
+    batches, arrow = {
+        "edges": (_edges_batches, _EDGES_ARROW),
+        "objects": (_objects_batches, _OBJECTS_ARROW),
     }[which]
     return get_or_persist(
         _SIDE_CACHE,
         spark,
         (sf, which),
-        lambda: _corpus(spark, sf).mapInArrow(batches, ddl),
+        lambda: _corpus(spark, sf).mapInArrow(
+            batches, from_arrow_schema(arrow)
+        ),
     )
 
 
@@ -441,7 +432,9 @@ FROM docs d JOIN px x ON x.rid = d.rid""",
 )
 def pdf_cleanup(spark, sf):
     # C24: canonical re-serialization; fixpoint must hold corpus-wide
-    c = _corpus(spark, sf).mapInArrow(_cleanup_batches, _CLEANUP_DDL)
+    c = _corpus(spark, sf).mapInArrow(
+        _cleanup_batches, from_arrow_schema(_CLEANUP_ARROW)
+    )
     return c.select("url", "clean_md5", "clean_bytes", "fixpoint")
 
 
@@ -517,10 +510,9 @@ def pdf_attachments(spark, sf):
     stage like every side table; payload bytes never leave the executor
     (only digests are emitted)."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_attach_batches, _ATTACH_DDL)
+    return raw.mapInArrow(_attach_batches, from_arrow_schema(_ATTACH_ARROW))
 
 
-_OUTLINE_DDL = "url string, pos int, level int, title string"
 _OUTLINE_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -573,12 +565,9 @@ def pdf_outline(spark, sf):
     string decode against the frozen per-recipe rows. Narrow Arrow stage,
     no shuffle."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_outline_batches, _OUTLINE_DDL)
+    return raw.mapInArrow(_outline_batches, from_arrow_schema(_OUTLINE_ARROW))
 
 
-_FORMFIELD_DDL = (
-    "url string, pos int, fname string, ft string, fvalue string"
-)
 _FORMFIELD_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -634,7 +623,9 @@ def pdf_formfields(spark, sf):
     resolved (radio-group pattern), values rendered deterministically —
     hash-verified against frozen per-recipe rows. Narrow Arrow stage."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_formfield_batches, _FORMFIELD_DDL)
+    return raw.mapInArrow(
+        _formfield_batches, from_arrow_schema(_FORMFIELD_ARROW)
+    )
 
 
 @_q(
@@ -663,10 +654,6 @@ def pdf_images(spark, sf):
     )
 
 
-_JS_DDL = (
-    "url string, pos int, source string, js_len int, js_md5 string, "
-    "js_head string"
-)
 _JS_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -727,10 +714,9 @@ def pdf_javascript(spark, sf):
     payloads pin the filter chain too. Narrow Arrow stage like every
     side table; only digests and 32-char heads leave the executor."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_js_batches, _JS_DDL)
+    return raw.mapInArrow(_js_batches, from_arrow_schema(_JS_ARROW))
 
 
-_ACT_DDL = "url string, pos int, source string, s string, target string"
 _ACT_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -792,13 +778,9 @@ def pdf_actions(spark, sf):
     against frozen per-recipe rows. Narrow Arrow stage; only subtype
     names and 64-char target heads leave the executor."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_act_batches, _ACT_DDL)
+    return raw.mapInArrow(_act_batches, from_arrow_schema(_ACT_ARROW))
 
 
-_REV_DDL = (
-    "url string, rev int, kind string, size int, has_prev boolean,"
-    " has_xrefstm boolean, n_won int"
-)
 _REV_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -858,13 +840,9 @@ def pdf_revisions(spark, sf):
     here). Narrow Arrow stage; only fixed-width facts leave the
     executor."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_rev_batches, _REV_DDL)
+    return raw.mapInArrow(_rev_batches, from_arrow_schema(_REV_ARROW))
 
 
-_PAGES_DDL = (
-    "url string, page int, obj string, content_bytes int, text_len int,"
-    " text_md5 string"
-)
 _PAGES_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -922,13 +900,9 @@ def pdf_pages(spark, sf):
     whole-document form-feed join the goldens pin. Narrow Arrow stage;
     digests only."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_pages_batches, _PAGES_DDL)
+    return raw.mapInArrow(_pages_batches, from_arrow_schema(_PAGES_ARROW))
 
 
-_FONTS_DDL = (
-    "url string, obj string, subtype string, base_font string,"
-    " embedded boolean"
-)
 _FONTS_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -983,13 +957,9 @@ def pdf_fonts(spark, sf):
     metrics. Byte-level /Font prune skips fontless documents before any
     parse; narrow Arrow stage, fixed-width facts only."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_fonts_batches, _FONTS_DDL)
+    return raw.mapInArrow(_fonts_batches, from_arrow_schema(_FONTS_ARROW))
 
 
-_SIGS_DDL = (
-    "url string, obj string, filter string, subfilter string,"
-    " n_ranges int, starts_at_zero boolean, unsigned_tail int"
-)
 _SIGS_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -1054,13 +1024,9 @@ def pdf_sigs(spark, sf):
     skips unsigned documents before any parse; narrow Arrow stage,
     fixed-width facts only."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_sigs_batches, _SIGS_DDL)
+    return raw.mapInArrow(_sigs_batches, from_arrow_schema(_SIGS_ARROW))
 
 
-_XMP_DDL = (
-    "url string, obj string, xmp_title string, xmp_creator string,"
-    " create_date string, info_title string, title_match boolean"
-)
 _XMP_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -1119,13 +1085,9 @@ def pdf_xmp(spark, sf):
     synchronized). Byte-level /Metadata prune skips packless documents
     before any parse; narrow Arrow stage, fixed-width facts only."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_xmp_batches, _XMP_DDL)
+    return raw.mapInArrow(_xmp_batches, from_arrow_schema(_XMP_ARROW))
 
 
-_SCAV_DDL = (
-    "url string, n_markers int, n_parsed int, n_confirmed int, "
-    "n_shadow int, n_xref_inuse int"
-)
 _SCAV_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -1194,13 +1156,9 @@ def pdf_scavenge(spark, sf):
     ints per url; zero shuffles, giants handled by the corpus' size-class
     salting like every other engine pass."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_scav_batches, _SCAV_DDL)
+    return raw.mapInArrow(_scav_batches, from_arrow_schema(_SCAV_ARROW))
 
 
-_REPAIR_DDL = (
-    "url string, repaired_bytes bigint, repaired_md5 string, "
-    "n_objects int, repaired_valid boolean"
-)
 _REPAIR_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -1264,13 +1222,9 @@ def pdf_repair(spark, sf):
     engine qkey — repair is per-document pure compute, no exchange; the
     output row is five fixed-width columns."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_repair_batches, _REPAIR_DDL)
+    return raw.mapInArrow(_repair_batches, from_arrow_schema(_REPAIR_ARROW))
 
 
-_ANNOT_DDL = (
-    "url string, pos int, page_idx int, subtype string,"
-    " has_action boolean, has_aa boolean, has_appearance boolean"
-)
 _ANNOT_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -1336,10 +1290,9 @@ def pdf_annots(spark, sf):
     Arrow stage; the ``/Annots`` byte-marker prune skips the page walk
     for the (overwhelming at web scale) annotation-free majority."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_annot_batches, _ANNOT_DDL)
+    return raw.mapInArrow(_annot_batches, from_arrow_schema(_ANNOT_ARROW))
 
 
-_CONTENTOP_DDL = "url string, op string, n int"
 _CONTENTOP_ARROW = pa.schema(
     [("url", pa.string()), ("op", pa.string()), ("n", pa.int32())]
 )
@@ -1391,13 +1344,11 @@ def pdf_content_ops(spark, sf):
     per-recipe rows.  Narrow Arrow stage; only (op, count) pairs leave
     the executor."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_contentop_batches, _CONTENTOP_DDL)
+    return raw.mapInArrow(
+        _contentop_batches, from_arrow_schema(_CONTENTOP_ARROW)
+    )
 
 
-_STREAMSTAT_DDL = (
-    "url string, num int, gen int, decoded boolean, n_bytes bigint,"
-    " n_distinct int, top_permille int"
-)
 _STREAMSTAT_ARROW = pa.schema(
     [
         ("url", pa.string()),
@@ -1462,4 +1413,6 @@ def pdf_stream_stats(spark, sf):
     rows.  Narrow Arrow stage; payload bytes never leave the executor —
     only six small integers per stream."""
     raw = _corpus(spark, sf)
-    return raw.mapInArrow(_streamstat_batches, _STREAMSTAT_DDL)
+    return raw.mapInArrow(
+        _streamstat_batches, from_arrow_schema(_STREAMSTAT_ARROW)
+    )

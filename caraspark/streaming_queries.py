@@ -1269,10 +1269,12 @@ def stream_annots(spark, sf):
     Scale: state is one row per annotation subtype ((28 defined by PDF17
     SS12.5.6); the stream materializes (subtype, url) pairs only —
     blobs die inside the Arrow stage of their own micro-batch."""
-    from caraspark.sidetables import _ANNOT_DDL, _annot_batches
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from caraspark.sidetables import _ANNOT_ARROW, _annot_batches
 
     docs = S.replay_corpus_stream(spark, sf)
-    an = docs.mapInArrow(_annot_batches, _ANNOT_DDL)
+    an = docs.mapInArrow(_annot_batches, from_arrow_schema(_ANNOT_ARROW))
     out = an.groupBy("subtype").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_annots"),
         F.sum(F.when(F.col("has_action"), 1).otherwise(0))
@@ -1307,10 +1309,14 @@ def stream_content_ops(spark, sf):
 
     Scale: state is one row per distinct operator (~70 defined);
     (op, count) pairs are all that cross the stream."""
-    from caraspark.sidetables import _CONTENTOP_DDL, _contentop_batches
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from caraspark.sidetables import _CONTENTOP_ARROW, _contentop_batches
 
     docs = S.replay_corpus_stream(spark, sf)
-    ops = docs.mapInArrow(_contentop_batches, _CONTENTOP_DDL)
+    ops = docs.mapInArrow(
+        _contentop_batches, from_arrow_schema(_CONTENTOP_ARROW)
+    )
     out = ops.groupBy("op").agg(
         F.sum("n").cast("bigint").alias("n_ops"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

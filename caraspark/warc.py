@@ -39,6 +39,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from caraspark.corpus import _ARROW as _RAW_ARROW
 from caraspark.relational import Q
 from caraspark.schemas import DOCUMENTS_RAW
 from caraspark.tables import load
@@ -247,16 +248,6 @@ def parse_warc(blob: bytes) -> list[dict]:
 # ---------------------------------------------------------------------------
 # Spark-side source / sink
 # ---------------------------------------------------------------------------
-
-_RAW_ARROW = pa.schema(
-    [
-        pa.field("url", pa.string(), False),
-        pa.field("warc_ts", pa.timestamp("us"), True),
-        pa.field("html", pa.large_binary(), True),
-        pa.field("text", pa.string(), True),
-        pa.field("lang", pa.string(), True),
-    ]
-)
 
 _WARC_BLOB = pa.schema([pa.field("warc", pa.large_binary(), False)])
 

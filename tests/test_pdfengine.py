@@ -13,6 +13,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from caraspark.pdfengine import process_document
+from caraspark.pdfengine.api import SURFACE_FIELDS, SURFACES
 from caraspark.pdfengine.lexer import Lexer
 from caraspark.pdfengine.model import Name, Real, Ref, canonical_json, from_canonical, to_canonical
 from caraspark.pdfengine.parser import TokenStream, parse_object
@@ -2150,6 +2151,69 @@ def test_html_v21_rdfa_want_projection():
     stats = process_document(html, want_text=False)
     assert stats.rdfa is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).rdfa == []
+
+
+# One HTML document that fills every surface field, beside a PDF with
+# text, spans, /Info title and subject and one with an outline (headings).
+_RICH_HTML = (
+    b"<html><head><title>T</title><link rel=canonical href='/c'>"
+    b"<meta name=description content='d'>"
+    b"<meta property='og:title' content='ogt'>"
+    b"<meta property='og:description' content='ogd'>"
+    b"<meta property='og:image' content='/i.png'>"
+    b"<meta name=robots content='NoIndex'>"
+    b"<meta http-equiv=refresh content='5; url=/x'><base href='/base/'>"
+    b"<link rel=next href='/p2'><link rel=prev href='/p0'>"
+    b"<link rel=alternate hreflang=de href='/de'>"
+    b"<script type='application/ld+json'>{\"@type\":\"Thing\"}</script>"
+    b"</head><body><h1>Head</h1><p>body <a href='/a'>anchor</a></p>"
+    b"<table><tr><th>h</th><td>c</td></tr></table><ul><li>item</li></ul>"
+    b"<img src='/img.png' alt='alt'><form method=post action='/login'></form>"
+    b"<div itemscope itemtype='https://schema.org/Thing'>"
+    b"<span itemprop='name'>N</span></div>"
+    b"<div vocab='https://schema.org/' typeof='Person'>"
+    b"<span property='name'>P</span></div></body></html>"
+)
+_SURFACE_DOCS = {
+    "rich_html": lambda: _RICH_HTML,
+    "pdf_info_title": PDF_RECIPES["pdf_info_title"],
+    "pdf_outline": PDF_RECIPES["pdf_outline"],
+}
+
+
+@pytest.mark.parametrize("doc", sorted(_SURFACE_DOCS))
+@pytest.mark.parametrize("surface", sorted(SURFACES))
+def test_surface_fields_project_alone(surface, doc):
+    """want={surface} fills exactly SURFACE_FIELDS[surface], each equal to
+    the full run's value, and leaves every other surface field None. A
+    requested list surface is never None: [] when the document has none."""
+    from pyspark.sql.types import ArrayType
+
+    from caraspark.schemas import EXTRACTED
+
+    blob = _SURFACE_DOCS[doc]()
+    full = process_document(blob)
+    only = process_document(blob, want={surface})
+    for s, fields in SURFACE_FIELDS.items():
+        for f in fields:
+            want = getattr(full, f) if s == surface else None
+            assert getattr(only, f) == want, (s, f)
+    for f in SURFACE_FIELDS[surface]:
+        if isinstance(EXTRACTED[f].dataType, ArrayType):
+            assert getattr(only, f) is not None, f
+        if doc == "rich_html":  # the fixture fills every surface field
+            assert getattr(only, f), f
+
+
+def test_surface_fields_cover_extracted_columns():
+    """The surface fields plus the fixed columns are EXTRACTED's columns,
+    each exactly once — a column added without a surface fails here."""
+    from caraspark.schemas import EXTRACTED
+
+    fixed = ["url", "warc_ts", "verdict", "kind", "errors", "metrics",
+             "flags", "version", "lineage"]
+    surface = [f for fields in SURFACE_FIELDS.values() for f in fields]
+    assert sorted(surface + fixed) == sorted(EXTRACTED.names)
 
 
 _SD_ATTR_ST = st.sampled_from(
